@@ -2,16 +2,17 @@
 
 Entry workloads: every (pass, entry) output the harness wrote is reduced
 to a digest and compared with the digest of the entry's DuckDB oracle
-SQL run over the same generated tables. The canonical form follows the
-project's oracle compare: columns sorted by name, ints / floats / decimals
-tagged by class so cross-class values differ, list floats rounded to 9
-dp, -0.0 folded into 0.0. Rows are compared as a multiset (count, xor and
-sum of row hashes; the harness writes without coalescing, so file order
-is not row order). Oracle digests are cached per (input digest, SQL).
+SQL run over the same generated tables. The canonical forms are the
+project's own, from tools/verify_local.py. Results of at most
+ORDERED_MAX_ROWS rows are compared row by row in order, as its python
+path does, so a dropped ORDER BY fails. Larger results are compared as a
+multiset (count, xor and sum of row hashes), as its fast path does.
+Oracle digests are cached per (input digest, SQL).
 
 iceberg_native: every test id scored exactly once in each of the six
 stacking submissions, every prediction in [0, 1], OOF log-loss < ln 2,
-and identical submissions across passes and across runs of one seed.
+and identical submissions across the passes of a run and across runs of
+one build on the same inputs.
 """
 import decimal
 import glob
@@ -19,90 +20,50 @@ import hashlib
 import json
 import math
 import os
+import sys
+from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
+from verify_local import _describe, _digest, canon  # noqa: E402
+
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+ORDERED_MAX_ROWS = 100_000
 
 
-def _tag(v, in_list=False):
-    if v is None or isinstance(v, (bool, str, bytes)):
-        return v
-    if isinstance(v, float):
-        if math.isnan(v):
-            return ("f", "NaN")
-        if in_list:
-            v = round(v, 9)
-        return ("f", 0.0 if v == 0 else v)
-    if isinstance(v, int):
-        return ("i", v)
-    if isinstance(v, decimal.Decimal):
-        return ("d", str(v.normalize()) if v else "0")
-    if isinstance(v, (list, tuple)):
-        return tuple(_tag(x, True) for x in v)
+def _eq_form(v):
+    """Map a canon() value to one whose repr is equal exactly when the
+    values compare == (Decimal 5.0 == 5.00, -0.0 == 0.0, dicts by key)."""
+    if isinstance(v, tuple):
+        return tuple(_eq_form(x) for x in v)
+    if isinstance(v, float) and v == 0:
+        return 0.0
+    if isinstance(v, decimal.Decimal) and v.is_finite():
+        return decimal.Decimal(0) if v == 0 else v.normalize()
     if isinstance(v, dict):
-        return tuple((k, _tag(x, in_list)) for k, x in v.items())
+        return tuple(sorted((k, _eq_form(x)) for k, x in v.items()))
     return v
 
 
-INTS = {"TINYINT", "SMALLINT", "INTEGER", "BIGINT", "HUGEINT", "UTINYINT",
-        "USMALLINT", "UINTEGER", "UBIGINT"}
-
-
-def _canon_sql(t, x, in_list=False):
-    """DuckDB VARCHAR expression equal for two values iff _tag() is, or None
-    for types it does not cover."""
-    t = t.upper()
-    if t in ("DOUBLE", "FLOAT", "REAL"):
-        d = f"CAST({x} AS DOUBLE)"
-        if in_list:
-            d = f"round({d}, 9)"
-        return (f"CASE WHEN isnan({d}) THEN 'f:NaN' WHEN {d} = 0 THEN 'f:0.0' "
-                f"ELSE 'f:' || CAST({d} AS VARCHAR) END")
-    if t in INTS:
-        return f"'i:' || CAST({x} AS VARCHAR)"
-    if t.startswith("DECIMAL"):
-        return (f"'d:' || CASE WHEN {x} = 0 THEN '0' ELSE "
-                f"rtrim(rtrim(CAST({x} AS VARCHAR), '0'), '.') END")
-    if t == "VARCHAR":
-        return f"'s:' || {x}"
-    if t == "BOOLEAN":
-        return f"'b:' || CAST({x} AS VARCHAR)"
-    if t.startswith("TIMESTAMP") or t == "DATE":
-        return f"'t:{t}:' || CAST({x} AS VARCHAR)"
-    if t.endswith("[]") and not in_list:
-        inner = _canon_sql(t[:-2], "e", in_list=True)
-        if inner is None:
-            return None
-        return f"'l:' || array_to_string(list_transform({x}, e -> coalesce({inner}, 'N')), ',')"
-    return None
-
-
-def digest(con, sql):
-    """(sorted column names, row count, multiset digest) of a query result.
-
-    Rows hash inside DuckDB when every column type has a canonical
-    spelling; otherwise they are canonicalized in Python."""
-    schema = con.execute(f"DESCRIBE SELECT * FROM ({sql}) q").fetchall()
-    cols = sorted(r[0] for r in schema)
-    types = {r[0]: r[1] for r in schema}
-    exprs = [_canon_sql(types[c], f'q."{c}"') for c in cols]
-    if all(e is not None for e in exprs):
-        row = "[" + ", ".join(f"coalesce({e}, 'N')" for e in exprs) + "]"
-        n, x, s = con.execute(
-            f"SELECT count(*), bit_xor(h), sum(h::HUGEINT) FROM "
-            f"(SELECT hash({row}) AS h FROM ({sql}) q)").fetchone()
-        return cols, n, f"{x}:{s}" if n else "empty"
-    cur = con.execute(f"SELECT * FROM ({sql}) q")
-    names = [d[0] for d in cur.description]
-    order = sorted(range(len(names)), key=lambda i: names[i])
-    lines = sorted(repr(tuple(_tag(r[i]) for i in order)) for r in cur.fetchall())
+def digest(con, src):
+    """(sorted column names, row count, digest) of a query result: rows in
+    order up to ORDERED_MAX_ROWS, beyond that a multiset digest."""
+    n = con.execute(f"SELECT count(*) FROM ({src})").fetchone()[0]
+    if n > ORDERED_MAX_ROWS:
+        cols_types = _describe(con, src)
+        d = _digest(con, src, cols_types)
+        if d is not None:
+            return sorted(c for c, _ in cols_types), n, f"multiset:{d[1]}:{d[2]}"
+    cur = con.execute(src)
+    cols = [d[0] for d in cur.description]
     h = hashlib.sha256()
-    for ln in lines:
-        h.update(ln.encode())
+    for row in canon(cur.fetchall(), cols):
+        h.update(repr(_eq_form(row)).encode())
         h.update(b"\n")
-    return cols, len(lines), h.hexdigest()
+    return sorted(cols), n, "ordered:" + h.hexdigest()
 
 
 def file_digest(paths):
@@ -123,15 +84,42 @@ def _load_cache(path):
         return {}
 
 
+def _source_digest(*paths):
+    h = hashlib.sha256()
+    for p in paths:
+        with open(p, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
+
+
 # cached oracle digests are only valid for the canonical form that made them
-with open(__file__, "rb") as _f:
-    SCHEME = hashlib.sha256(_f.read()).hexdigest()
+SCHEME = _source_digest(__file__, os.path.join(ROOT, "tools", "verify_local.py"))
+
+
+def _save_cache(cache, path):
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(cache, f)
+    os.replace(tmp, path)
+
+
+def _read(path):
+    with open(path, "rb") as f:
+        return f.read()
+
+
+def _try_digest(con, src):
+    """digest() on a cursor of its own, or the DuckDB error as a string."""
+    try:
+        return list(digest(con.cursor(), src))
+    except duckdb.Error as e:
+        return str(e)[:200]
 
 
 def check_entries(data_dir, out_dir, ops, cache_path):
-    """Return {(name, pass): error-or-None} for every op record that ran."""
+    """Return {(name, pass): error-or-None} for every op record that ran.
+    The digests run on four threads, each on its own DuckDB cursor."""
     con = duckdb.connect()
-    con.execute("SET threads=4")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{data_dir}/{t}.parquet')")
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
@@ -139,30 +127,35 @@ def check_entries(data_dir, out_dir, ops, cache_path):
     input_digest = file_digest(glob.glob(os.path.join(data_dir, "*.parquet")))
     cache = _load_cache(cache_path)
     verdict = {}
+    done = [op for op in ops if op["err"] is None and op["name"] in oracle]
     for op in ops:
-        key = (op["name"], op["pass"])
-        if op["err"] is not None:
-            verdict[key] = op["err"]
-            continue
-        sql = oracle.get(op["name"])
-        if sql is None:
-            verdict[key] = "no oracle SQL"
-            continue
-        ck = hashlib.sha256((SCHEME + input_digest + "\0" + sql).encode()).hexdigest()
-        if ck not in cache:
-            try:
-                cache[ck] = list(digest(con, sql))
-            except duckdb.Error as e:
-                verdict[key] = f"oracle error: {str(e)[:200]}"
-                continue
-        got = digest(con, f"SELECT * FROM read_parquet('{out_dir}/p{op['pass']}/{op['name']}/*.parquet')")
-        want = tuple(cache[ck][:2]) + (cache[ck][2],)
-        verdict[key] = None if tuple(got) == want else \
-            f"digest mismatch: spark cols/rows {got[0]}/{got[1]} oracle {want[0]}/{want[1]}"
-    tmp = cache_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(cache, f)
-    os.replace(tmp, cache_path)
+        if op not in done:
+            verdict[(op["name"], op["pass"])] = op["err"] or "no oracle SQL"
+    ck = {op["name"]: hashlib.sha256((SCHEME + input_digest + "\0" + oracle[op["name"]]).encode())
+          .hexdigest() for op in done}
+    with ThreadPoolExecutor(4) as pool:
+        want = {n: pool.submit(_try_digest, con, oracle[n]) for n, k in ck.items() if k not in cache}
+        # passes usually write byte-identical files: digest each content once
+        by_content, got = {}, {}
+        for op in done:
+            parts = os.path.join(out_dir, f"p{op['pass']}", op["name"], "*.parquet")
+            key = hashlib.sha256(b"".join(_read(p) for p in sorted(glob.glob(parts)))).digest()
+            if key not in by_content:
+                by_content[key] = pool.submit(_try_digest, con, f"SELECT * FROM read_parquet('{parts}')")
+            got[(op["name"], op["pass"])] = by_content[key]
+        for n, fut in want.items():
+            if isinstance(fut.result(), list):
+                cache[ck[n]] = fut.result()
+        for (n, p), fut in got.items():
+            w, g = cache.get(ck[n]), fut.result()
+            if w is None:
+                verdict[(n, p)] = f"oracle error: {want[n].result()}"
+            elif not isinstance(g, list):
+                verdict[(n, p)] = f"output unreadable: {g}"
+            else:
+                verdict[(n, p)] = None if g == w else \
+                    f"digest mismatch: spark cols/rows {g[0]}/{g[1]} oracle {w[0]}/{w[1]}"
+    _save_cache(cache, cache_path)
     return verdict
 
 
@@ -172,10 +165,14 @@ def read_ids(path):
     return [r["id"] for r in arr]
 
 
-def check_iceberg(data_dir, out_dir, ops, passes, modes, cache_path):
-    """Return ({pass: error-or-None}, submission digest of the last good pass)."""
+def check_iceberg(data_dir, out_dir, ops, passes, modes, cache_path, code_digest):
+    """Return ({pass: error-or-None}, submission digest of the last good pass).
+
+    Submission digests are cached per (input digest, code digest): a later
+    run of the same build on the same inputs must reproduce it, while a
+    different build is free to move a 6-dp prediction."""
     test_ids = sorted(read_ids(os.path.join(data_dir, "test.json")))
-    input_digest = file_digest(glob.glob(os.path.join(data_dir, "*.json")))
+    run_key = file_digest(glob.glob(os.path.join(data_dir, "*.json"))) + ":" + code_digest
     cache = _load_cache(cache_path)
     verdict, sub = {}, None
     for op, ps in zip(ops, passes):
@@ -212,10 +209,9 @@ def check_iceberg(data_dir, out_dir, ops, passes, modes, cache_path):
             sub = sub or d
         verdict[n] = err
     if sub is not None:
-        prev = cache.setdefault(input_digest, sub)
+        prev = cache.setdefault(run_key, sub)
         if prev != sub:
-            verdict = {n: e or "submission differs from an earlier run on the same inputs"
+            verdict = {n: e or "submission differs from an earlier run of this build on the same inputs"
                        for n, e in verdict.items()}
-        with open(cache_path, "w") as f:
-            json.dump(cache, f)
+        _save_cache(cache, cache_path)
     return verdict, sub

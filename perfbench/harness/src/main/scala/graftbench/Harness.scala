@@ -8,18 +8,20 @@ import org.apache.spark.sql.SparkSession
 /** Closed-loop benchmark driver, one client thread.
   *
   * `Harness <spec.properties>` builds the session, runs an untimed
-  * warm-up pass, then whole timed passes over the workload's operations
-  * (order reshuffled per pass from the seed) until `seconds` have
-  * elapsed, and writes one JSON record to `result`. With `trace=1` the
-  * timed budget is split four ways: untraced, traced, traced, untraced
-  * passes. The [[Tracer]]'s span tree yields the per-layer numbers, and
-  * the traced-minus-untraced pass wall is the tracing overhead. Output
+  * warm-up pass, then `passes` whole timed passes over the workload's
+  * operations (order reshuffled per pass from the seed), and writes one
+  * JSON record to `result`. The pass count is fixed by the caller, not by
+  * how many passes fit a time budget, so every run reports its statistics
+  * over the same number of samples. With `trace=1` the passes are split
+  * four ways: untraced, traced, traced, untraced. The [[Tracer]]'s span
+  * tree yields the per-layer numbers, and the traced-minus-untraced pass
+  * wall is the tracing overhead. Output
   * checks happen in perfbench/check.py against what each pass wrote under
   * `out`.
   */
 object Harness {
   final case class Op(name: String, pass: Int, lat: Double, err: Option[String])
-  final case class Pass(wall: Double, traced: Boolean, extra: Seq[(String, String)])
+  final case class Pass(wall: Double, traced: Boolean, heapMb: Double, extra: Seq[(String, String)])
 
   final class Ctx(val spark: SparkSession, val spec: java.util.Properties) {
     def p(k: String): String =
@@ -55,7 +57,6 @@ object Harness {
     try spec.load(rd) finally rd.close()
     val launchS = (mainMs - spec.getProperty("spawn_ms", mainMs.toString).toLong) / 1e3
     graft.Verify.quietDeliberateWindowWarn()
-    Probes.installGcWatch()
     Probes.installCodegenTimer()
     val t0 = System.nanoTime()
     val spark = session(spec.getProperty("cores").toInt)
@@ -72,39 +73,34 @@ object Harness {
     workload.prepare()
     workload.pass(-1) // warm-up, untimed: codegen, class loading, fixtures
     val warmS = (System.nanoTime() - tw) / 1e9
+    System.gc() // the first timed pass starts from a collected heap
 
-    val seconds = ctx.p("seconds").toDouble
+    val count = ctx.p("passes").toInt
     val trace = ctx.p("trace") == "1"
     val passes = ArrayBuffer.empty[Pass]
-    // whole passes only; another starts while it is expected to end in budget
-    def timed(budget: Double, traced: Boolean): Unit = {
-      val start = System.nanoTime()
-      var last = 0.0
-      def elapsed = (System.nanoTime() - start) / 1e9
-      while (last == 0.0 || elapsed + last <= budget) {
-        val p0 = elapsed
-        System.gc() // untimed hygiene: each pass starts from a collected heap
-        val n = passes.size
-        val pspan = if (traced) ctx.tracer.open("pass") else null
-        val extra = workload.pass(n)
-        if (pspan != null) ctx.tracer.close(pspan)
-        passes += Pass(workload.passWall, traced, extra)
-        last = elapsed - p0
-      }
+    def timed(k: Int, traced: Boolean): Unit = (0 until k).foreach { _ =>
+      Probes.heapPeak = 0L
+      val n = passes.size
+      val pspan = if (traced) ctx.tracer.open("pass") else null
+      val extra = workload.pass(n)
+      if (pspan != null) ctx.tracer.close(pspan)
+      // untimed: the live heap the pass left behind; the next starts collected
+      Probes.collect()
+      passes += Pass(workload.passWall, traced, Probes.heapPeak / 1048576.0, extra)
     }
     Probes.armed = true
     if (trace) {
       // untraced, traced, traced, untraced: pass order (late JIT, heap
       // growth) weighs on both sides of the overhead difference alike
+      require(count % 4 == 0, s"a traced run needs a multiple of 4 passes, not $count")
       val tracer = new Tracer(spark)
       Seq(false, true, true, false).foreach { traced =>
         if (traced) tracer.install() else tracer.uninstall()
         ctx.tracer = if (traced) tracer else null
-        timed(seconds / 4, traced)
+        timed(count / 4, traced)
       }
       ctx.tracer = tracer
-    } else timed(seconds, traced = false)
-    System.gc() // the live heap the last pass left behind
+    } else timed(count, traced = false)
     Probes.armed = false
 
     val layers = if (trace) PerLayer(ctx, passes.toSeq) else Nil
@@ -115,9 +111,9 @@ object Harness {
       "launch_s" -> Json.num(launchS),
       "session_s" -> Json.num(sessionS),
       "warm_s" -> Json.num(warmS),
-      "heap_live_peak_mb" -> Json.num(Probes.heapPeak.get / 1048576.0),
       "passes" -> passes.map(p => Json.obj(Seq("wall" -> Json.num(p.wall),
-        "traced" -> p.traced.toString) ++ p.extra)).mkString("[", ",", "]"),
+        "traced" -> p.traced.toString, "heap_mb" -> Json.num(p.heapMb)) ++ p.extra))
+        .mkString("[", ",", "]"),
       "ops" -> workload.ops.map { o =>
         Json.obj(Seq("name" -> Json.str(o.name), "pass" -> o.pass.toString,
           "lat" -> Json.num(o.lat), "err" -> o.err.map(Json.str).getOrElse("null")))
@@ -159,7 +155,8 @@ final class Entries(ctx: Harness.Ctx) extends Workload {
     val order = new scala.util.Random(ctx.seed * 1000003L + n).shuffle(names)
     wall = 0.0
     order.foreach { name =>
-      System.gc() // untimed: an op does not pay for its predecessors' garbage
+      // untimed: an op does not pay for its predecessors' garbage
+      if (n >= 0) Probes.collect()
       val path = s"${ctx.out}/${if (n < 0) "warm" else s"p$n"}/$name"
       val t0 = System.nanoTime()
       val err = try {

@@ -30,7 +30,7 @@ final class Span(val id: Int, val parent: Int, val name: String) {
 /** Process-wide probes that exist whether or not tracing is on: the
   * streaming progress listener (registered through the session conf, so
   * every `newSession()` a streaming entry isolates itself in is covered),
-  * the GC heap watermark and the code-generation timer. */
+  * the live-heap reading and the code-generation timer. */
 object Probes {
   val tracer = new AtomicReference[Tracer](null)
   @volatile var armed = false
@@ -40,31 +40,16 @@ object Probes {
       planMs: Long, addBatchMs: Long, commitMs: Long)
   val progress = new java.util.concurrent.ConcurrentLinkedQueue[Progress]()
 
-  // ---- heap: highest heap occupancy after a full collection while armed.
-  // Young-collection readings still hold old-generation garbage, so they
-  // measure collector timing rather than live data.
-  val heapPeak = new AtomicLong(0L)
-  def installGcWatch(): Unit = {
-    import com.sun.management.GarbageCollectionNotificationInfo
-    import javax.management.{Notification, NotificationEmitter, NotificationListener}
-    import javax.management.openmbean.CompositeData
-    val heapPools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(_.getType == java.lang.management.MemoryType.HEAP).map(_.getName).toSet
-    val l = new NotificationListener {
-      def handleNotification(n: Notification, hb: Any): Unit =
-        if (armed && n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
-          val info = GarbageCollectionNotificationInfo.from(n.getUserData.asInstanceOf[CompositeData])
-          if (info.getGcAction.contains("major")) {
-            val used = info.getGcInfo.getMemoryUsageAfterGc.asScala
-              .collect { case (k, v) if heapPools(k) => v.getUsed }.sum
-            heapPeak.accumulateAndGet(used, (a, b) => math.max(a, b))
-          }
-        }
-    }
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala.foreach {
-      case e: NotificationEmitter => e.addNotificationListener(l, null, null)
-      case _ => ()
-    }
+  // ---- heap: the live heap right after each untimed full collection the
+  // harness makes at an operation, stage or pass boundary; the highest such
+  // reading of the current pass, while armed. A collection inside an
+  // operation would read that operation's transient data at a point that
+  // differs run to run, so only the harness's own collections count.
+  var heapPeak = 0L
+  def collect(): Unit = {
+    System.gc()
+    if (armed) heapPeak = math.max(heapPeak,
+      java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed)
   }
 
   // ---- codegen: Spark logs every compile as "Code generated in X ms"

@@ -34,10 +34,11 @@ final class Iceberg(ctx: Harness.Ctx) extends Workload {
     Seq("oof_logloss" -> Json.num(loss))
   }
 
-  /** Times one stage; the full GC before it is untimed and reads the live
-    * heap, which still holds every earlier stage's pinned output. */
+  /** Times one stage; the full GC before it (timed passes only) is untimed
+    * and reads the live heap, which still holds every earlier stage's
+    * pinned output. */
   private def stage[T](name: String)(body: => T): T = {
-    System.gc()
+    if (cur >= 0) Probes.collect()
     val t0 = System.nanoTime()
     val r = ctx.span(s"stage:$name")(body)
     val lat = (System.nanoTime() - t0) / 1e9

@@ -29,13 +29,13 @@ class PlantedSleep(unittest.TestCase):
         root = os.getcwd()
         bdir = os.path.abspath(os.environ.get("CARGO_TARGET_DIR") or ".bench_build")
         os.makedirs(bdir, exist_ok=True)
-        jar = run.build(root, bdir)
+        jar, _ = run.build(root, bdir)
         run_dir = os.path.join(bdir, "run", "selftest")
         shutil.rmtree(run_dir, ignore_errors=True)
         out, tmp = os.path.join(run_dir, "out"), os.path.join(run_dir, "tmp")
         os.makedirs(out)
         os.makedirs(tmp)
-        spec = {"workload": "selftest", "seed": 1, "seconds": 1, "trace": 1,
+        spec = {"workload": "selftest", "seed": 1, "passes": 4, "trace": 1,
                 "cores": run.CORES, "out": out, "data": run_dir,
                 "result": os.path.join(run_dir, "result.json"), "ops": "",
                 "sleep_ms": int(SLEEP_S * 1000), "spawn_ms": int(time.time() * 1000)}
