@@ -88,21 +88,21 @@ object Verify {
     ctx.updateLoggers()
   }
 
-  def main(args: Array[String]): Unit = {
-    // driver contract: (sfDir, outDir). An optional third arg — a regex
-    // over query names — is local-iteration tooling only (dump a few
-    // entries + oracle_sql.json for tools/verify_local.py).
-    val Array(sfDir, outDir, rest @ _*) = args: @unchecked
-    val nameFilter = rest.headOption.map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  /** The one local session both mains run on. SPARK_GRAFT_CPUS sets
+    * the cores and shuffle partitions; unset, every available core. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     quietDeliberateWindowWarn() // BEFORE the session: NativeCodeLoader logs at startup
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      // static conf, sized to hold every suite plan's codegen units
-      // (default-100 LRU thrashes across 180 entries — see Bench)
+      // STATIC conf; default 100. The suite compiles several hundred
+      // distinct whole-stage-codegen units, so the default LRU thrashes
+      // and even Bench's pass 2 recompiles ~every unit. Sized to hold
+      // the whole suite's units once.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.sql.adaptive.enabled", "true")
       // Non-ANSI: cast yields null on garbage (pandas to_numeric coerce
@@ -127,6 +127,35 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     quietDeliberateWindowWarn()
+    spark
+  }
+
+  /** JSON string literal: backslash, quote, and ALL control chars
+    * (<0x20) escaped — a tab or CR in builder-authored SQL, or an
+    * exception message echoing raw input bytes, would otherwise break
+    * the reader's JSON parse. */
+  private[graft] def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  private def rm(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
+    f.delete(): Unit
+  }
+
+  def main(args: Array[String]): Unit = {
+    // args: (sfDir, outDir). An optional third arg — a regex over query
+    // names — dumps only the matching entries (plus oracle_sql.json for
+    // tools/verify_local.py).
+    val Array(sfDir, outDir, rest @ _*) = args: @unchecked
+    val nameFilter = rest.headOption.map(_.r)
+    val spark = session()
     new java.io.File(outDir).mkdirs()
     // harness setup: the SAR fixture some oracle SQL reads by absolute
     // path must exist before ANY phase (Spark or DuckDB) runs
@@ -145,25 +174,9 @@ object Verify {
         // delete any PREVIOUS dump of this entry (r11 lesson: a rerun
         // into a reused outDir otherwise compares the stale parquet and
         // masks the failure as green)
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
         rm(new java.io.File(s"$outDir/$name"))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // The dumped oracle map covers every entry whose parquet dump is
     // PRESENT in outDir, plus the entries this run (re)dumped, plus
     // every key the PREVIOUS on-disk oracle_sql.json carried. All
@@ -242,10 +255,6 @@ object Verify {
       outDir: String): Map[String, String] = {
     val leaked = graft.streaming.EphemeralCheckpointFileManager.totalFiles
     val dump = new java.io.File(s"$outDir/$LeakGuardKey")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
     if (leaked > 0) {
       System.err.println(s"[verify] LEAK: $leaked RAM-checkpoint files " +
         "still tracked after all entries — some streaming entry skipped " +

@@ -202,17 +202,10 @@ object ImageGeometry {
   // --- Column wrappers ---
   val bilinearResizeUdf =
     udf((a: Array[Double], h0: Int, w0: Int, h1: Int, w1: Int) => bilinearResize(a, h0, w0, h1, w1))
-  val flipHUdf = udf((a: Array[Double], w: Int) => flipH(a, w))
-  val flipVUdf = udf((a: Array[Double], w: Int) => flipV(a, w))
-  val cropUdf =
-    udf((a: Array[Double], imgW: Int, x0: Int, y0: Int, w: Int, h: Int) => crop(a, imgW, x0, y0, w, h))
   val tenCropUdf =
     udf((a: Array[Double], imgW: Int, imgH: Int, w: Int, h: Int) => tenCrop(a, imgW, imgH, w, h))
   val augmentFlipUdf =
     udf((a: Array[Double], w: Int, id: Long, epoch: Int) => augmentFlip(a, w, id, epoch))
-  val affineUdf =
-    udf((a: Array[Double], w: Int, h: Int, theta: Double, zoom: Double, sx: Double, sy: Double) =>
-      affine(a, w, h, theta, zoom, sx, sy))
   val augmentFlipVUdf =
     udf((a: Array[Double], w: Int, id: Long, epoch: Int) => augmentFlipV(a, w, id, epoch))
   val augmentFullUdf =

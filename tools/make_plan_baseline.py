@@ -5,18 +5,12 @@ Usage: python3 tools/make_plan_baseline.py [record] [source-label]
 Defaults: target/bench_last.json, "<record> (local close run)".
 
 Guard rails:
-- refuses a record without a plan map (truncated stdout line);
-- refuses a record with errors (a failed entry's plan row is partial);
-- prints the heavy-pin entries' vectors so the operator can eyeball
-  them against Bench.heavyRefPlanPin — if one CHANGED, HeavyPinSpec
-  will fail until Bench.heavyRef is re-measured and both maps updated
-  together (the enforced RE-PIN POLICY).
+- refuses a record without a plan map (Bench's stdout summary line);
+- refuses a record with errors (a failed entry's plan row is partial).
 """
 import json
 import os
 import sys
-
-HEAVY_PINS = ("dd_components", "gr_pagerank", "ml_stack")
 
 
 def main():
@@ -29,7 +23,7 @@ def main():
     plan = rec.get("plan")
     if not plan:
         sys.exit("ERROR: record carries no plan map — use target/bench_last.json, "
-                 "not the truncated stdout line")
+                 "not Bench's stdout summary line")
     if rec.get("n_errors", 0):
         sys.exit(f"ERROR: record has {rec['n_errors']} errored entries — "
                  "a failed entry's plan row is partial; fix and re-run Bench")
@@ -48,13 +42,6 @@ def main():
     dst = os.path.join(root, "PLAN_BASELINE.json")
     json.dump(out, open(dst, "w"), indent=1, sort_keys=True)
     print(f"wrote {dst}: {out['n_entries']} entries at {out['sf']}")
-    for k in HEAVY_PINS:
-        v = plan.get(k, {})
-        print(f"  heavy pin {k}: exchanges={v.get('exchanges')} "
-              f"broadcasts={v.get('broadcasts')} scans={v.get('scans')} "
-              f"shuffle_rows={v.get('shuffle_rows')}")
-    print("cross-check the three vectors against Bench.heavyRefPlanPin "
-          "(HeavyPinSpec enforces equality).")
 
 
 if __name__ == "__main__":
