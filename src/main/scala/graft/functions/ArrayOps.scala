@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2.3 / §2.5 array operators as Catalyst column
   * combinators — no UDFs, no driver loops. The one-pass stats family
-  * (sum/mean/std) and min-max normalize route through the NATIVE
-  * codegen expressions `array_stats` / `minmax_norm`
-  * (plans/ArrayFused.scala, registered by GraftExtensions — every
-  * session here configures it): builtin higher-order-function lambdas
+  * (sum/mean/std), min-max normalize and the iso mask route through
+  * the NATIVE codegen expressions `array_stats` / `minmax_norm` /
+  * `iso_mask` (plans/ArrayFused.scala, registered by GraftExtensions —
+  * every session here configures it): builtin higher-order-function lambdas
   * (`aggregate`/`transform`) evaluate interpreted outside whole-stage
   * codegen, which made these folds the a7/a9/ml_tta hot spots; the
   * native expressions run the bit-identical left-to-right folds inside
@@ -51,11 +51,11 @@ object ArrayOps {
     call_function("minmax_norm", a.cast("array<double>"))
 
   // --- A9: iso threshold mask: keep pixels > mean+2*std, zero the rest
-  // (main-newInput.py:79-81). ---
-  def isoMask(a: Column): Column = {
-    val thr = arrayMean(a) + lit(2.0) * arrayStd(a)
-    transform(a, x => when(x > thr, x).otherwise(lit(0.0)))
-  }
+  // (main-newInput.py:79-81). Native fused expression (iso_mask): one
+  // stats fold + one mask pass; a `transform` lambda holding the
+  // threshold would run interpreted and re-run both folds per pixel. ---
+  def isoMask(a: Column): Column =
+    call_function("iso_mask", a.cast("array<double>"))
 
   // --- A10: size feature — fraction of pixels below `cut`
   // (main-newInput.py:82-83 uses cut = -5 on SAR dB values). ---

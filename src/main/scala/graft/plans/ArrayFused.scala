@@ -14,8 +14,9 @@ import org.apache.spark.sql.types._
   * Why: `aggregate`/`transform` lambdas evaluate INTERPRETED (outside
   * whole-stage codegen — see the memory/measurements at
   * Dedup.scala:78-82), so ArrayOps.arrayStd cost two interpreted folds
-  * per row and isoMask's threshold three. This expression runs the
-  * identical left-to-right folds inside the generated loop.
+  * per row. This expression runs the identical left-to-right folds
+  * inside the generated loop. (The iso mask's threshold is the same
+  * fold, fused into [[IsoMask]]: zero interpreted folds.)
   *
   * Bit-parity contract (the oracle hash depends on it): sum and sumsq
   * are the same `0.0 + x0 + x1 + …` left-to-right double folds the
@@ -178,5 +179,72 @@ case class MinMaxNormalize(child: Expression) extends UnaryExpression {
     })
 
   override protected def withNewChildInternal(newChild: Expression): MinMaxNormalize =
+    copy(child = newChild)
+}
+
+/** Fused A9 iso mask (main-newInput.py:79-81): keep pixels above
+  * mean + 2σ, zero the rest, in two passes — one sum/sumsq fold, one
+  * mask write. Spelled as a `transform` lambda holding the threshold,
+  * the mask runs interpreted and re-runs both array_stats folds for
+  * every pixel: O(n²) per band, the paper pipeline's features-stage
+  * hot spot at 75×75.
+  *
+  * Bit-parity contract: the threshold is the same IEEE expression
+  * ArrayStats and ArrayOps spell — `0.0 + x0 + …` left-to-right folds,
+  * mean = sum/n, std = sqrt((sumsq − sum·sum/n)/n), thr = mean + 2·std
+  * — and an element is kept iff `v > thr` (no NaN element can meet a
+  * non-NaN thr: one NaN makes the sums NaN). So the output equals the
+  * former `transform(a, x => when(x > thr, x).otherwise(0.0))` bit for
+  * bit; IsoMaskProps checks that under both codegen modes.
+  *
+  * Null semantics (the former spelling's): null input → null; any null
+  * ELEMENT → all zeros of the same length (thr was null, so `when`
+  * fell through to `otherwise` for every pixel); empty → empty; NaN
+  * anywhere → all zeros.
+  *
+  * One kernel, [[mask]], serves both eval paths: generated code calls
+  * it through a reference object, so the parity formula exists once.
+  */
+case class IsoMask(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"iso_mask expects array<double>, got ${t.sql}")
+  }
+
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def prettyName: String = "iso_mask"
+
+  def mask(a: ArrayData): ArrayData = {
+    val n = a.numElements()
+    val out = new Array[Double](n)
+    var sum = 0.0; var sumsq = 0.0
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i)) return new GenericArrayData(out)
+      val v = a.getDouble(i)
+      sum += v; sumsq += v * v
+      i += 1
+    }
+    val nd = n.toDouble
+    val thr = sum / nd + 2.0 * math.sqrt((sumsq - sum * sum / nd) / nd)
+    i = 0
+    while (i < n) {
+      val v = a.getDouble(i)
+      if (v > thr) out(i) = v
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  override def nullSafeEval(input: Any): Any = mask(input.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("isoMask", this)
+    defineCodeGen(ctx, ev, a => s"$self.mask($a)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): IsoMask =
     copy(child = newChild)
 }

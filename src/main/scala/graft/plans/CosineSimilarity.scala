@@ -142,6 +142,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         MinMaxNormalize(asDoubleArray(children.head))
       }))
     ext.injectFunction((
+      new FunctionIdentifier("iso_mask"),
+      new ExpressionInfo(classOf[IsoMask].getName, "iso_mask"),
+      (children: Seq[Expression]) => {
+        require(children.length == 1, "iso_mask expects exactly 1 argument")
+        IsoMask(asDoubleArray(children.head))
+      }))
+    ext.injectFunction((
       new FunctionIdentifier("zorder2"),
       new ExpressionInfo(classOf[ZOrder2].getName, "zorder2"),
       (children: Seq[Expression]) => {

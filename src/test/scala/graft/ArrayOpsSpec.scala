@@ -41,6 +41,33 @@ class ArrayOpsSpec extends SparkSpec {
     asDoubles(evalOnArray(Seq(1.0, 2.0, 3.0), isoMask)) shouldBe Seq(0.0, 0.0, 0.0)
   }
 
+  test("A9 isoMask: null array -> null, null element -> zeros, empty -> empty") {
+    import spark.implicits._
+    val df = Seq[(Int, Seq[java.lang.Double])](
+      (1, null),
+      (2, Seq[java.lang.Double](0.0, 0.0, 0.0, null, 100.0)),
+      (3, Seq.empty)).toDF("k", "a")
+    val got = df.select(col("k"), isoMask(col("a"))).collect()
+      .map(r => r.getInt(0) -> r.get(1)).toMap
+    assert(got(1) == null)
+    // the threshold is undefined with a null pixel: every pixel zeroes,
+    // the outlier included, and the length is kept
+    asDoubles(got(2)) shouldBe Seq(0.0, 0.0, 0.0, 0.0, 0.0)
+    asDoubles(got(3)) shouldBe empty
+  }
+
+  test("A9 iso_mask resolves in SQL and coerces numeric arrays") {
+    val r = spark.sql("SELECT iso_mask(array(0, 0, 0, 0, 0, 0, 0, 0, 100)) AS m").head()
+    asDoubles(r.get(0)) shouldBe Seq(0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 100.0)
+  }
+
+  test("A9 iso_mask rejects a non-numeric array with a type-check failure") {
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT iso_mask(array('a', 'b')) AS m").collect()
+    }
+    e.getMessage should include("iso_mask expects array<double>, got ARRAY<STRING>")
+  }
+
   test("A10 sizeFeature: fraction of pixels below cut") {
     val a = Seq.fill(13)(0.0) ++ Seq(-6.0, -7.0, -8.0) // 3 of 16 below -5
     evalOnArray(a, sizeFeature(_, -5.0)) shouldBe 3.0 / 16.0

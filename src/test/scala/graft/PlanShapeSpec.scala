@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{AsOf, Components, RangeJoin}
+import org.apache.spark.sql.catalyst.expressions.LambdaFunction
 import org.apache.spark.sql.functions._
 
 /** 100 TB plan-shape assertions for the r6 join/graph/text family —
@@ -714,6 +715,19 @@ class PlanShapeSpec extends SparkSpec {
       // would re-run them per ELEMENT — counts would jump)
       "array_stats".r.findAllIn(pIso).size shouldBe 3
       "lambdafunction".r.findAllIn(pIso).size shouldBe 2 // mask + count
+    }
+    // the library path the paper pipeline calls: the iso feature is the
+    // native iso_mask (one stats fold + one mask pass). A lambda whose
+    // body holds array_stats re-runs the stats per ELEMENT — O(n²) per
+    // 75×75 band, which the former transform-based isoMask did
+    val sar = Ingest.coerce(Ingest.readSarJson(spark, SarFixture.path))
+    val feat = Features.addScalarFeatures(Features.addDerivedBands(sar))
+      .queryExecution.optimizedPlan
+    withClue(feat) {
+      val exprs = feat.flatMap(_.expressions)
+      exprs.flatMap(_.collect { case l: LambdaFunction => l })
+        .filter(_.function.exists(_.prettyName == "array_stats")) shouldBe empty
+      exprs.flatMap(_.collect { case e if e.prettyName == "iso_mask" => e }).size shouldBe 2
     }
     val pBand = staticPlan(QueriesArrays.a2BandAlgebra.fn(spark, sf))
     withClue(pBand) {
